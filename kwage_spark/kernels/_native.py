@@ -6,8 +6,12 @@ our pure-numpy kernel is memory-traffic-bound at a few MB/s/core, which is
 the wrong side of a 100 TB job. This module compiles a ~60-line C
 implementation at first use and exposes it through ctypes. Everything is
 OPTIONAL: if no C compiler is present (or ``KWAGE_DISABLE_NATIVE=1``),
-callers in ``murmur3.py`` fall back to the numpy path, which is
-bit-identical (tested in tests/test_kernels.py::test_native_parity).
+``HAVE_NATIVE`` is False. The wrappers operators call
+(``scan_count_chunks``, ``bloom_scan_count``, ``sliding_ranges_multiseed``,
+``sliding_ranges_minhash``) then run their own numpy path, so operators
+never branch on it; the sketch kernels in ``murmur3.py``, ``bloom.py``,
+``hll.py`` and ``cms.py`` check it themselves. Both paths are
+bit-identical (parity tests in tests/test_kernels.py).
 
 The shared object is cached under the system temp dir keyed by the sha256
 of the C source, so executor workers on one machine compile once; the
@@ -21,7 +25,6 @@ import ctypes
 import hashlib
 import os
 import subprocess
-import sys
 import tempfile
 
 import numpy as np
@@ -135,35 +138,6 @@ void mm3_rows_multiseed(const uint8_t *buf, int64_t n, int64_t width,
     for (int64_t i = 0; i < n; i++)
         for (int64_t s = 0; s < nseeds; s++)
             out[i * nseeds + s] = mm3_body(buf + i * width, width, seeds[s]);
-}
-
-/* sliding multiseed over m variable-length strings packed in buf with m+1
-   offsets: window hashes of string i occupy rows [sum_j<i max(len_j-k+1,0),
-   ...) of out — i.e. per-string results concatenated, never crossing a
-   string boundary. */
-void mm3_sliding_batch_multiseed(const uint8_t *buf, const int64_t *offsets,
-                                 int64_t m, int64_t k,
-                                 const uint32_t *seeds, int64_t nseeds,
-                                 uint32_t *out) {
-    int64_t row = 0;
-    for (int64_t i = 0; i < m; i++) {
-        int64_t len = offsets[i + 1] - offsets[i];
-        int64_t n = len - k + 1;
-        if (n <= 0) continue;
-        mm3_sliding_multiseed(buf + offsets[i], len, k, seeds, nseeds,
-                              out + row * nseeds);
-        row += n;
-    }
-}
-
-/* murmur3_32 of m variable-length strings packed in buf with m+1 offsets. */
-void mm3_batch_multiseed(const uint8_t *buf, const int64_t *offsets,
-                         int64_t m, const uint32_t *seeds, int64_t nseeds,
-                         uint32_t *out) {
-    for (int64_t i = 0; i < m; i++)
-        for (int64_t s = 0; s < nseeds; s++)
-            out[i * nseeds + s] = mm3_body(
-                buf + offsets[i], offsets[i + 1] - offsets[i], seeds[s]);
 }
 
 /* sliding multiseed over m strings given as (start, len) ranges into a
@@ -504,7 +478,6 @@ if os.environ.get("KWAGE_DISABLE_NATIVE", "") != "1":
         try:
             _lib = ctypes.CDLL(_so_path)
             for fn in ("mm3_sliding_multiseed", "mm3_rows_multiseed",
-                       "mm3_batch_multiseed", "mm3_sliding_batch_multiseed",
                        "mm3_sliding_ranges_multiseed",
                        "mm3_sliding_minhash", "mm3_sliding_ranges_minhash",
                        "bloom_scan_count",
@@ -541,14 +514,7 @@ if os.environ.get("KWAGE_DISABLE_NATIVE", "") != "1":
             _lib.mm3_sliding_multiseed.argtypes = [
                 ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64,
                 ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p]
-            _lib.mm3_sliding_batch_multiseed.argtypes = [
-                ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int64,
-                ctypes.c_int64, ctypes.c_void_p, ctypes.c_int64,
-                ctypes.c_void_p]
             _lib.mm3_rows_multiseed.argtypes = [
-                ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64,
-                ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p]
-            _lib.mm3_batch_multiseed.argtypes = [
                 ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64,
                 ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p]
             HAVE_NATIVE = True
@@ -583,21 +549,22 @@ def rows_multiseed(rows: np.ndarray, seeds: np.ndarray) -> np.ndarray:
     return out
 
 
-def sliding_batch_multiseed(buf: np.ndarray, offsets: np.ndarray, k: int,
-                            seeds: np.ndarray) -> np.ndarray:
-    """Concatenated per-string sliding-window hashes (no boundary windows).
-    Returns (sum_i max(len_i-k+1, 0), nseeds) uint32 — native path."""
-    buf = np.ascontiguousarray(buf, dtype=np.uint8)
-    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-    seeds = np.ascontiguousarray(seeds, dtype=np.uint32)
-    lens = np.diff(offsets)
-    n_out = int(np.maximum(lens - k + 1, 0).sum())
-    out = np.empty((n_out, seeds.shape[0]), dtype=np.uint32)
-    if n_out > 0:
-        _lib.mm3_sliding_batch_multiseed(
-            buf.ctypes.data, offsets.ctypes.data, offsets.shape[0] - 1, k,
-            seeds.ctypes.data, seeds.shape[0], out.ctypes.data)
-    return out
+#: flush threshold for the numpy minhash path's stacked window matrix —
+#: bounds the per-hash-call temp at ~MAX_STACKED_WINDOWS x nseeds x 4 B
+#: (256 MiB at 2^20 windows x 64 perms) regardless of batch size
+MAX_STACKED_WINDOWS = 1 << 20
+
+
+def _stacked_minima(mats: list[np.ndarray], counts: list[int],
+                    seeds: np.ndarray) -> np.ndarray:
+    """Per-string minima of one multiseed hash call over stacked windows."""
+    from .murmur3 import murmur3_32_multiseed
+    stacked = mats[0] if len(mats) == 1 else np.concatenate(mats, axis=0)
+    h = murmur3_32_multiseed(stacked, seeds)        # (N, nseeds)
+    bounds = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=bounds[1:])
+    return np.stack([h[s:e].min(axis=0)
+                     for s, e in zip(bounds[:-1], bounds[1:])])
 
 
 def sliding_ranges_minhash(buf: np.ndarray, starts: np.ndarray,
@@ -606,17 +573,43 @@ def sliding_ranges_minhash(buf: np.ndarray, starts: np.ndarray,
     """(m, nseeds) uint32 minhash signatures — per-string min over every
     k-byte window's multiseed murmur, fused in C (the hash matrix is
     never materialized). Strings shorter than k yield all-UINT32_MAX
-    rows; callers filter those before the call for minhash semantics."""
+    rows; callers filter those before the call for minhash semantics.
+
+    Numpy path: stack every string's (exactly k-byte) window matrix into
+    one hash call and take per-string minima over segment slices,
+    flushing at ``MAX_STACKED_WINDOWS`` rows to bound the hash temp."""
     buf = np.ascontiguousarray(buf, dtype=np.uint8)
     starts = np.ascontiguousarray(starts, dtype=np.int64)
     lens = np.ascontiguousarray(lens, dtype=np.int64)
     seeds = np.ascontiguousarray(seeds, dtype=np.uint32)
     m = starts.shape[0]
     out = np.empty((m, seeds.shape[0]), dtype=np.uint32)
-    if m > 0:
+    if m == 0:
+        return out
+    if HAVE_NATIVE:
         _lib.mm3_sliding_ranges_minhash(
             buf.ctypes.data, starts.ctypes.data, lens.ctypes.data,
             m, k, seeds.ctypes.data, seeds.shape[0], out.ctypes.data)
+        return out
+    from numpy.lib.stride_tricks import sliding_window_view
+    out.fill(0xFFFFFFFF)
+    rows: list[int] = []
+    mats: list[np.ndarray] = []
+    counts: list[int] = []
+    stacked_rows = 0
+    for i, (s, ln) in enumerate(zip(starts.tolist(), lens.tolist())):
+        if ln < k:
+            continue
+        w = sliding_window_view(buf[s:s + ln], k)
+        rows.append(i)
+        mats.append(w)
+        counts.append(w.shape[0])
+        stacked_rows += w.shape[0]
+        if stacked_rows >= MAX_STACKED_WINDOWS:
+            out[rows] = _stacked_minima(mats, counts, seeds)
+            rows, mats, counts, stacked_rows = [], [], [], 0
+    if rows:
+        out[rows] = _stacked_minima(mats, counts, seeds)
     return out
 
 
@@ -650,22 +643,40 @@ def cms_update(table: np.ndarray, log2_w: int, hashes: np.ndarray) -> None:
 
 def bloom_scan_count(B: np.ndarray, idx: np.ndarray, qoff: np.ndarray,
                      num_hash: int) -> np.ndarray:
-    """Per-(filter row, query) match counts — native scan kernel.
+    """Per-(filter row, query) match counts — row-major scan kernel.
 
     B: (n_rows, row_bytes) uint8 contiguous; idx: flat masked bit indices
     (uint32), query q at idx[qoff[q]:qoff[q+1]] gram-major; returns
-    (n_rows, nq) int32.
+    (n_rows, nq) int32. Numpy path: per-query gather+AND+popcount,
+    bit-identical, with the gather scratch bounded to ~16 MB per chunk.
     """
     B = np.ascontiguousarray(B, dtype=np.uint8)
     idx = np.ascontiguousarray(idx, dtype=np.uint32)
     qoff = np.ascontiguousarray(qoff, dtype=np.int64)
+    n = B.shape[0]
     nq = qoff.shape[0] - 1
-    out = np.empty((B.shape[0], max(nq, 0)), dtype=np.int32)
-    if B.shape[0] and nq:
+    out = np.zeros((n, max(nq, 0)), dtype=np.int32)
+    if not (n and nq):
+        return out
+    if HAVE_NATIVE:
         _lib.bloom_scan_count(
-            B.ctypes.data, B.shape[0], B.shape[1],
+            B.ctypes.data, n, B.shape[1],
             idx.ctypes.data, qoff.ctypes.data, nq, num_hash,
             out.ctypes.data)
+        return out
+    for q in range(nq):
+        flat = idx[qoff[q]:qoff[q + 1]]
+        n_unique = flat.size // num_hash
+        if n_unique == 0:
+            continue
+        byte_idx = (flat >> np.uint32(3)).astype(np.int64)
+        bit_shift = (flat & np.uint32(7)).astype(np.uint8)
+        chunk = max(1, (1 << 24) // flat.size)
+        for r0 in range(0, n, chunk):
+            sub = B[r0:r0 + chunk]
+            g = (sub[:, byte_idx] >> bit_shift) & np.uint8(1)
+            hits = g.reshape(sub.shape[0], n_unique, num_hash).all(axis=2)
+            out[r0:r0 + sub.shape[0], q] = hits.sum(axis=1)
     return out
 
 
@@ -711,35 +722,66 @@ def bloom_scan_count_sliced(S: np.ndarray, n_rows: int, idx: np.ndarray,
     return out
 
 
+def scan_count_chunks(B: np.ndarray, idx: np.ndarray, qoff: np.ndarray,
+                      num_hash: int):
+    """Yield (row_offset, (rows, nq) int32 match-count matrix) chunks of
+    the containment scan, picking the kernel by query count:
+
+      * many queries (>= 64): BIT-SLICED scan — transpose the chunk's
+        filter matrix (cheap 8x8-block kernel) so each query touches
+        n_grams x rows/8 contiguous bytes instead of streaming the whole
+        index set per row. This is KWAGE's bit-sliced layout decision
+        (build_db.cpp:224-231) applied per batch: ~4x faster per core and
+        cache-friendly at high parallelism.
+      * few queries: row-major kernel (transpose not amortized).
+      * no native library: the row-major wrapper's numpy path.
+
+    The sliced kernel accumulates per-row counts in uint16, so it is only
+    selected when every query has < 2^16 unique k-grams; a jumbo query
+    (>= 64 KB of unique grams) routes the whole batch to the int32
+    row-major kernel instead of silently wrapping counts mod 65536.
+    """
+    n = B.shape[0]
+    nq = qoff.shape[0] - 1
+    max_grams = (int((np.diff(qoff) // max(num_hash, 1)).max())
+                 if nq > 0 else 0)
+    if HAVE_NATIVE and nq >= 64 and max_grams < (1 << 16):
+        row_chunk = max(64, (64 << 20) // max(4 * nq, 1))
+        for r0 in range(0, n, row_chunk):
+            sub = B[r0:r0 + row_chunk]
+            yield r0, bloom_scan_count_sliced(
+                transpose_bits(sub), sub.shape[0], idx, qoff, num_hash)
+    else:
+        # the (rows x nq) int32 count matrix is chunked to ~16 MB
+        row_chunk = max(1, (16 << 20) // max(4 * nq, 1))
+        for r0 in range(0, n, row_chunk):
+            yield r0, bloom_scan_count(B[r0:r0 + row_chunk], idx, qoff,
+                                       num_hash)
+
+
 def sliding_ranges_multiseed(buf: np.ndarray, starts: np.ndarray,
                              lens: np.ndarray, k: int,
                              seeds: np.ndarray) -> np.ndarray:
     """Per-range sliding-window hashes over a shared byte buffer (ranges
-    may be unordered / non-contiguous, e.g. Arrow string column rows)."""
+    may be unordered / non-contiguous, e.g. Arrow string column rows).
+    Returns (sum_i max(len_i-k+1, 0), nseeds) uint32, ranges in input
+    order; the numpy path hashes range by range."""
     buf = np.ascontiguousarray(buf, dtype=np.uint8)
     starts = np.ascontiguousarray(starts, dtype=np.int64)
     lens = np.ascontiguousarray(lens, dtype=np.int64)
     seeds = np.ascontiguousarray(seeds, dtype=np.uint32)
     n_out = int(np.maximum(lens - k + 1, 0).sum())
+    if n_out == 0:
+        return np.empty((0, seeds.shape[0]), dtype=np.uint32)
+    if not HAVE_NATIVE:
+        from .murmur3 import murmur3_32_sliding
+        parts = [murmur3_32_sliding(buf[s:s + ln], k, seeds)
+                 for s, ln in zip(starts.tolist(), lens.tolist())
+                 if ln >= k]
+        return parts[0] if len(parts) == 1 else np.concatenate(parts)
     out = np.empty((n_out, seeds.shape[0]), dtype=np.uint32)
-    if n_out > 0:
-        _lib.mm3_sliding_ranges_multiseed(
-            buf.ctypes.data, starts.ctypes.data, lens.ctypes.data,
-            starts.shape[0], k, seeds.ctypes.data, seeds.shape[0],
-            out.ctypes.data)
-    return out
-
-
-def batch_multiseed(buf: np.ndarray, offsets: np.ndarray,
-                    seeds: np.ndarray) -> np.ndarray:
-    """(m, nseeds) uint32 for m packed variable-length strings."""
-    buf = np.ascontiguousarray(buf, dtype=np.uint8)
-    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-    seeds = np.ascontiguousarray(seeds, dtype=np.uint32)
-    m = offsets.shape[0] - 1
-    out = np.empty((max(m, 0), seeds.shape[0]), dtype=np.uint32)
-    if m > 0:
-        _lib.mm3_batch_multiseed(
-            buf.ctypes.data, offsets.ctypes.data, m,
-            seeds.ctypes.data, seeds.shape[0], out.ctypes.data)
+    _lib.mm3_sliding_ranges_multiseed(
+        buf.ctypes.data, starts.ctypes.data, lens.ctypes.data,
+        starts.shape[0], k, seeds.ctypes.data, seeds.shape[0],
+        out.ctypes.data)
     return out

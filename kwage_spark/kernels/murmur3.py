@@ -150,31 +150,6 @@ def murmur3_32_sliding(buf: np.ndarray, k: int, seeds: np.ndarray) -> np.ndarray
     return h1
 
 
-def murmur3_32_sliding_batch(raws: list[bytes], k: int,
-                             seeds: np.ndarray) -> np.ndarray:
-    """Sliding-window hashes of MANY byte strings in one call, results
-    concatenated in input order; windows never cross a string boundary.
-
-    This is the ingest hot path's batch form: one kernel invocation per
-    pandas group instead of one per row, removing per-row Python/ctypes
-    overhead (the reference amortizes the same way with its ≤2000-word
-    buffers, `bloom_test.cpp:141-152`).
-    """
-    seeds = np.asarray(seeds, dtype=np.uint32)
-    if not raws:
-        return np.empty((0, seeds.shape[0]), dtype=np.uint32)
-    if _native.HAVE_NATIVE:
-        buf = np.frombuffer(b"".join(raws), dtype=np.uint8)
-        offsets = np.zeros(len(raws) + 1, dtype=np.int64)
-        np.cumsum([len(r) for r in raws], out=offsets[1:])
-        return _native.sliding_batch_multiseed(buf, offsets, k, seeds)
-    parts = [murmur3_32_sliding(np.frombuffer(r, dtype=np.uint8), k, seeds)
-             for r in raws if len(r) >= k]
-    if not parts:
-        return np.empty((0, seeds.shape[0]), dtype=np.uint32)
-    return np.concatenate(parts) if len(parts) > 1 else parts[0]
-
-
 def murmur3_64(windows: np.ndarray, seed_hi: int = 0xA5, seed_lo: int = 0x5A) -> np.ndarray:
     """Composed 64-bit hash from two independent 32-bit lanes.
 

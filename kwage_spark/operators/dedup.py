@@ -27,7 +27,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..kernels.murmur3 import murmur3_32_multiseed
-from ..kernels.shingle import windows_of
 from .caching import persist_tracked
 from .util import ensure_parallelism
 
@@ -89,64 +88,23 @@ def _cap_hot_buckets(keyed: DataFrame, bucket_cols: list[str], id_col: str,
 
 
 # ------------------------------------------------------------------ minhash
-#: flush threshold for the stacked window matrix in minhash_signatures —
-#: bounds the per-kernel-call temp at ~MAX_STACKED_WINDOWS x num_perm x 4 B
-#: (256 MiB at 2^20 windows x 64 perms) regardless of Arrow batch size
-MAX_STACKED_WINDOWS = 1 << 20
-
-
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       k: int = 5, num_perm: int = 64,
-                       use_native: bool | None = None,
-                       max_stacked: int = MAX_STACKED_WINDOWS) -> DataFrame:
+                       k: int = 5, num_perm: int = 64) -> DataFrame:
     """(id, sig array<bigint>) — sig[i] = min over k-grams of murmur(gram, seed_i).
 
-    No per-document Python loop in the hash path. Native path: one FUSED
-    sliding-window + per-seed-min C call per Arrow batch over the
+    No per-document Python loop in the hash path: one FUSED
+    sliding-window + per-seed-min call per Arrow batch over the
     concatenated document bytes (`_native.sliding_ranges_minhash`) — the
     (n_windows x num_perm) hash matrix is never materialized, block
     mixing is shared across overlapping windows, and memory traffic is
-    O(bytes), not O(windows x perms x 4). Numpy fallback: stack every
-    document's (exactly k-byte) window matrix into one kernel call and
-    take per-document minima over segment slices, flushing at
-    ``MAX_STACKED_WINDOWS`` rows to bound the hash temp. Both paths are
-    byte-identical to the per-document reference (pytest-pinned);
-    microbench in BENCH/BASELINE.md. ``use_native=None`` auto-detects.
+    O(bytes), not O(windows x perms x 4). Without the native library the
+    same call runs its batched numpy path. Both are byte-identical to the
+    per-document reference (pytest-pinned); microbench in
+    BENCH/BASELINE.md.
     """
     seeds = (MINHASH_SEED_BASE + np.arange(num_perm)).astype(np.uint32)
 
-    def flush_numpy(ids: list, mats: list[np.ndarray], counts: list[int]
-                    ) -> pd.DataFrame:
-        stacked = mats[0] if len(mats) == 1 else np.concatenate(mats, axis=0)
-        h = murmur3_32_multiseed(stacked, seeds)        # (N, num_perm)
-        bounds = np.zeros(len(counts) + 1, dtype=np.int64)
-        np.cumsum(counts, out=bounds[1:])
-        mins = np.stack([h[s:e].min(axis=0)
-                         for s, e in zip(bounds[:-1], bounds[1:])])
-        return pd.DataFrame({id_col: ids,
-                             "sig": mins.astype(np.int64).tolist()})
-
-    def gen_numpy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            mats: list[np.ndarray] = []
-            counts: list[int] = []
-            stacked_rows = 0
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                w = windows_of(text, k)
-                if w.shape[0] == 0:
-                    continue
-                ids.append(rid)
-                mats.append(w)
-                counts.append(w.shape[0])
-                stacked_rows += w.shape[0]
-                if stacked_rows >= max_stacked:
-                    yield flush_numpy(ids, mats, counts)
-                    ids, mats, counts, stacked_rows = [], [], [], 0
-            if ids:
-                yield flush_numpy(ids, mats, counts)
-
-    def gen_native(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernels import _native
         for pdf in batches:
             raw = [t.encode("utf-8", "surrogatepass")
@@ -167,9 +125,6 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                 {id_col: pdf[id_col].to_numpy()[keep],
                  "sig": sigs.astype(np.int64).tolist()})
 
-    from ..kernels import _native
-    native = _native.HAVE_NATIVE if use_native is None else use_native
-    gen = gen_native if native else gen_numpy
     return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
         gen, schema=f"{id_col} long, sig array<bigint>")
 

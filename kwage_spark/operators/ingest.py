@@ -54,7 +54,6 @@ from ..kernels.kll import KLLState
 from ..kernels.kmv import KMVState
 from ..kernels.tdigest import TDigestState
 from ..kernels import _native
-from ..kernels.murmur3 import murmur3_32_sliding
 from .merge import merge_grouped_states
 
 
@@ -114,13 +113,7 @@ def _feed_group_ranges(states: dict[str, object], cfg: SketchConfig,
     n_kgrams = int(np.maximum(lens - cfg.k + 1, 0).sum())
     if lanes and n_kgrams:
         seeds = np.arange(lanes, dtype=np.uint32)
-        if _native.HAVE_NATIVE:
-            H = _native.sliding_ranges_multiseed(buf, starts, lens, cfg.k, seeds)
-        else:
-            parts = [murmur3_32_sliding(buf[s:s + ln], cfg.k, seeds)
-                     for s, ln in zip(starts.tolist(), lens.tolist())
-                     if ln >= cfg.k]
-            H = parts[0] if len(parts) == 1 else np.concatenate(parts)
+        H = _native.sliding_ranges_multiseed(buf, starts, lens, cfg.k, seeds)
         _feed_hashes(states, cfg, H)
     if KIND_KLL in states:
         states[KIND_KLL].add_values(sizes.astype(np.float64))

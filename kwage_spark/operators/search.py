@@ -28,10 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import KIND_BLOOM, SketchConfig
-from ..kernels.bloom import _HDR, _MAGIC as _BLOOM_MAGIC, BloomState
+from ..kernels import _native
+from ..kernels.bloom import _HDR, _MAGIC as _BLOOM_MAGIC
 from ..kernels.shingle import unique_query_hashes
-
-_ = BloomState  # re-exported for callers that parse single states
 
 RESULT_SCHEMA_TAIL = ("query_id long, num_kmers long, num_kmers_found long, "
                       "percent_kmers_found double")
@@ -44,91 +43,48 @@ def prepare_queries(queries: Sequence[tuple[int, str]], cfg: SketchConfig
             for qid, snippet in queries]
 
 
-def _count_matrix_chunks(B: np.ndarray, flat_q: np.ndarray,
-                         qoff_q: np.ndarray, num_hash: int, nq: int):
-    """Yield (row_offset, (rows, nq) int32 match-count matrix) chunks,
-    picking the kernel by query count:
+def _scan_core(sketches: DataFrame, queries: Sequence[tuple[int, str]],
+               cfg: SketchConfig, threshold: float):
+    """The one containment scan both result shapes share.
 
-      * many queries (>= 64): BIT-SLICED scan — transpose the chunk's
-        filter matrix (cheap 8x8-block kernel) so each query touches
-        n_grams x rows/8 contiguous bytes instead of streaming the whole
-        index set per row. This is KWAGE's bit-sliced layout decision
-        (build_db.cpp:224-231) applied per batch: ~4x faster per core and
-        cache-friendly at high parallelism.
-      * few queries: row-major kernel (transpose not amortized).
-
-    The sliced kernel accumulates per-row counts in uint16, so it is only
-    selected when every query has < 2^16 unique k-grams; a jumbo query
-    (>= 64 KB of unique grams) routes the whole batch to the int32
-    row-major kernel instead of silently wrapping counts mod 65536.
-
-    Caller must have checked _native.HAVE_NATIVE.
-    """
-    from ..kernels import _native
-    n = B.shape[0]
-    max_grams = (int((np.diff(qoff_q) // max(num_hash, 1)).max())
-                 if qoff_q.shape[0] > 1 else 0)
-    if nq >= 64 and max_grams < (1 << 16):
-        row_chunk = max(64, (64 << 20) // max(4 * nq, 1))
-        for r0 in range(0, n, row_chunk):
-            sub = B[r0:r0 + row_chunk]
-            S = _native.transpose_bits(sub)
-            yield r0, _native.bloom_scan_count_sliced(
-                S, sub.shape[0], flat_q, qoff_q, num_hash)
-    else:
-        row_chunk = max(1, (16 << 20) // max(4 * nq, 1))
-        for r0 in range(0, n, row_chunk):
-            yield r0, _native.bloom_scan_count(
-                B[r0:r0 + row_chunk], flat_q, qoff_q, num_hash)
-
-
-def containment_search(sketches: DataFrame, queries: Sequence[tuple[int, str]],
-                       cfg: SketchConfig, threshold: float = 1.0,
-                       emit_all: bool = False, ordered: bool = True) -> DataFrame:
-    """sketches(bloom rows) x queries -> match DataFrame.
-
-    Output: group_cols…, query_id, num_kmers, num_kmers_found,
-    percent_kmers_found — the reference's CSV/JSON result shape
-    (`output.h:35-59`).
+    Driver half: digest and mask the queries, broadcast them once.
+    Returns (bloom_rows, bq, scan): ``bq.value`` is (qids, num_kmers,
+    thresholds, flat bit indices, per-query offsets), and ``scan`` is the
+    executor half — it stacks each pandas batch's filters into a
+    (rows, m/8) byte matrix after checking every row's header, then
+    yields (batch, row_offset, (rows, nq) int32 count matrix) chunks from
+    ``_native.scan_count_chunks`` (≙ the reference's per-filter count
+    loop, kwage.cpp:409-423). CRC is not re-verified here, matching the
+    reference's read path, which checksums at build/merge time only.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
-    prepared = prepare_queries(queries, cfg)
-    gcols = list(cfg.group_cols)
-    sc = sketches.sparkSession.sparkContext
     # broadcast pre-masked bit indices, not raw hashes: executors do zero
     # per-query prep (≙ broadcasting the query's slice-index set, Q2).
-    # The flat/offset form feeds the native scan kernel in ONE call per
-    # row-chunk across ALL queries.
+    # The flat/offset form feeds the scan kernel in ONE call per row
+    # chunk across ALL queries.
     mask = np.uint32(cfg.bloom.m - 1)
-    masked = [(int(qid), (h.astype(np.uint32) & mask), int(h.shape[0]))
-              for qid, h in prepared]
-    flat_idx = (np.concatenate([m.ravel() for _, m, _ in masked])
-                if masked else np.empty(0, dtype=np.uint32))
-    qoff = np.concatenate(
-        ([0], np.cumsum([m.size for _, m, _ in masked]))).astype(np.int64)
-    bq = sc.broadcast((masked, flat_idx, qoff))
+    prepared = prepare_queries(queries, cfg)
+    qids = np.asarray([q for q, _ in prepared], dtype=np.int64)
+    nuniq = np.asarray([h.shape[0] for _, h in prepared], dtype=np.int64)
+    # int(threshold * n) truncation per query (kwage.cpp:388)
+    thr = (threshold * nuniq).astype(np.int64)
+    flat_idx = (np.concatenate([(h.astype(np.uint32) & mask).ravel()
+                                for _, h in prepared])
+                if prepared else np.empty(0, dtype=np.uint32))
+    qoff = np.concatenate(([0], np.cumsum([h.size for _, h in prepared]))
+                          ).astype(np.int64)
+    bq = sketches.sparkSession.sparkContext.broadcast(
+        (qids, nuniq, thr, flat_idx, qoff))
     hdr_size = _HDR.size  # BloomState header prefix before raw bits
     n_bytes = cfg.bloom.n_bytes
-    num_hash = cfg.bloom.num_hash
-    cfg_log2_m = cfg.bloom.log2_m
-    has_meta = "meta" in sketches.columns  # FilterInfo passthrough (S11)
-    schema = ", ".join(f"{c} string" for c in gcols)
-    if has_meta:
-        schema += ", sample_metadata map<string,string>"
-    schema += ", " + RESULT_SCHEMA_TAIL
+    want = (cfg.bloom.log2_m, cfg.bloom.num_hash)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Whole-batch matrix scan: stack the batch's filters into a
-        # (rows, m/8) byte matrix once, then count matches for ALL queries
-        # in one native-kernel call per row chunk (bloom_scan_count —
-        # row-outer so each filter streams through cache once, ≙ the
-        # reference's per-filter count loop kwage.cpp:409-423). Fallback:
-        # per-query numpy gather+AND+popcount, bit-identical (parity-
-        # tested). CRC is not re-verified here, matching the reference's
-        # read path, which checksums at build/merge time only.
-        from ..kernels import _native
-        qs, flat_q, qoff_q = bq.value
+    def scan(batches: Iterator[pd.DataFrame]
+             ) -> Iterator[tuple[pd.DataFrame, int, np.ndarray]]:
+        flat_q, qoff_q = bq.value[3:]
+        if qoff_q.shape[0] < 2:
+            return
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -141,96 +97,65 @@ def containment_search(sketches: DataFrame, queries: Sequence[tuple[int, str]],
                 # with the wrong mask / truncated bits and return silently
                 # wrong counts (heterogeneous stores must fold() first)
                 # plain format string: struct.Struct objects don't pickle
-                magic, _ver, row_l2m, row_nh = struct.unpack_from("<IBBB", s, 0)
-                if magic != _BLOOM_MAGIC:
-                    raise ValueError("containment_search: non-bloom state "
-                                     f"magic 0x{magic:08x} in bloom rows")
-                if row_l2m != cfg_log2_m or row_nh != num_hash:
+                magic, _ver, l2m, nh = struct.unpack_from("<IBBB", s, 0)
+                if magic != _BLOOM_MAGIC or (l2m, nh) != want:
                     raise ValueError(
-                        "containment_search: state params (log2_m="
-                        f"{row_l2m}, num_hash={row_nh}) != cfg ("
-                        f"{cfg_log2_m}, {num_hash}); fold() the store or "
-                        "search with the matching SketchConfig")
+                        f"containment scan: state header (magic=0x"
+                        f"{magic:08x}, log2_m={l2m}, num_hash={nh}) does "
+                        f"not match the search config (magic=0x"
+                        f"{_BLOOM_MAGIC:08x}, log2_m={want[0]}, "
+                        f"num_hash={want[1]}); fold() the store or search "
+                        "with the matching SketchConfig")
                 B[i] = np.frombuffer(s, dtype=np.uint8, count=n_bytes,
                                      offset=hdr_size)
-            gvals = {c: pdf[c].to_numpy() for c in gcols}
-            mvals = pdf["meta"].to_numpy() if has_meta else None
-            frames = []
+            for r0, fm in _native.scan_count_chunks(B, flat_q, qoff_q,
+                                                    want[1]):
+                yield pdf, r0, fm
 
-            def emit(qid: int, n_unique: int, found: np.ndarray,
-                     base: int) -> None:
-                q_threshold = int(threshold * n_unique)  # kwage.cpp:388
-                sel = (np.arange(found.shape[0]) if emit_all
-                       else np.nonzero(found >= q_threshold)[0])
-                if sel.size == 0:
-                    return
-                rows_sel = sel + base
-                f = {c: gvals[c][rows_sel] for c in gcols}
-                if mvals is not None:
-                    f["sample_metadata"] = mvals[rows_sel]
-                f["query_id"] = np.full(sel.size, qid, dtype=np.int64)
-                f["num_kmers"] = np.full(sel.size, n_unique, dtype=np.int64)
-                f["num_kmers_found"] = found[sel]
-                f["percent_kmers_found"] = 100.0 * found[sel] / n_unique
-                frames.append(pd.DataFrame(f))
+    return sketches.filter(F.col("kind") == KIND_BLOOM), bq, scan
 
-            if _native.HAVE_NATIVE and qs:
-                # one kernel call per row chunk covers EVERY query; the
-                # (rows x nq) int32 count matrix is chunked to ~16 MB.
-                # Emission is vectorized across queries too — one frame
-                # per chunk, not one per (query, chunk): with thousands
-                # of queries the per-frame pandas overhead otherwise
-                # dwarfs the counting kernel itself.
-                nq = len(qs)
-                qids_arr = np.asarray([q[0] for q in qs], dtype=np.int64)
-                nuniq_arr = np.asarray([q[2] for q in qs], dtype=np.int64)
-                # int(threshold * n) truncation per query (kwage.cpp:388);
-                # n_unique == 0 queries are silently invalid (F10)
-                thr_arr = (threshold * nuniq_arr).astype(np.int64)
-                valid = nuniq_arr > 0
-                for r0, fm in _count_matrix_chunks(B, flat_q, qoff_q,
-                                                   num_hash, nq):
-                    ok = (np.ones_like(fm, dtype=bool) if emit_all
-                          else fm >= thr_arr[None, :]) & valid[None, :]
-                    rsel, qsel = np.nonzero(ok)
-                    if rsel.size == 0:
-                        continue
-                    rows_sel = rsel + r0
-                    f = {c: gvals[c][rows_sel] for c in gcols}
-                    if mvals is not None:
-                        f["sample_metadata"] = mvals[rows_sel]
-                    f["query_id"] = qids_arr[qsel]
-                    f["num_kmers"] = nuniq_arr[qsel]
-                    f["num_kmers_found"] = fm[rsel, qsel].astype(np.int64)
-                    f["percent_kmers_found"] = (100.0 * f["num_kmers_found"]
-                                                / f["num_kmers"])
-                    frames.append(pd.DataFrame(f))
-            else:
-                for qid, idx, n_unique in qs:
-                    if n_unique == 0:          # F10: silent no-match
-                        continue
-                    flat = idx.ravel()
-                    byte_idx = (flat >> np.uint32(3)).astype(np.int64)
-                    bit_shift = (flat & np.uint32(7)).astype(np.uint8)
-                    found = np.empty(n, dtype=np.int64)
-                    # bound the gather scratch to ~16 MB per chunk
-                    chunk = max(1, (1 << 24) // max(flat.size, 1))
-                    for r0 in range(0, n, chunk):
-                        sub = B[r0:r0 + chunk]
-                        g = (sub[:, byte_idx] >> bit_shift) & np.uint8(1)
-                        hits = g.reshape(sub.shape[0], n_unique,
-                                         num_hash).all(axis=2)
-                        found[r0:r0 + sub.shape[0]] = hits.sum(axis=1)
-                    emit(qid, n_unique, found, 0)
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
 
-    bloom_rows = sketches.filter(F.col("kind") == KIND_BLOOM)
-    res = bloom_rows.mapInPandas(scan, schema=schema)
-    if not ordered:
-        # large fan-out consumers (sinks, joins) don't need the global
-        # sort — a range shuffle of every result row — skip it on request
-        return res
+def containment_search(sketches: DataFrame, queries: Sequence[tuple[int, str]],
+                       cfg: SketchConfig, threshold: float = 1.0,
+                       emit_all: bool = False) -> DataFrame:
+    """sketches(bloom rows) x queries -> match DataFrame.
+
+    Output: group_cols…, query_id, num_kmers, num_kmers_found,
+    percent_kmers_found — the reference's CSV/JSON result shape
+    (`output.h:35-59`), sorted per Q8.
+    """
+    bloom_rows, bq, scan = _scan_core(sketches, queries, cfg, threshold)
+    gcols = list(cfg.group_cols)
+    has_meta = "meta" in sketches.columns  # FilterInfo passthrough (S11)
+    schema = ", ".join(f"{c} string" for c in gcols)
+    if has_meta:
+        schema += ", sample_metadata map<string,string>"
+    schema += ", " + RESULT_SCHEMA_TAIL
+
+    def match_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # Emission is vectorized across queries — one frame per count
+        # chunk, not one per (query, chunk): with thousands of queries
+        # the per-frame pandas overhead otherwise dwarfs the kernel.
+        qids, nuniq, thr = bq.value[:3]
+        valid = nuniq > 0  # n_unique == 0 queries are silently invalid (F10)
+        for pdf, r0, fm in scan(batches):
+            ok = (np.ones_like(fm, dtype=bool) if emit_all
+                  else fm >= thr[None, :]) & valid[None, :]
+            rsel, qsel = np.nonzero(ok)
+            if rsel.size == 0:
+                continue
+            rows_sel = rsel + r0
+            f = {c: pdf[c].to_numpy()[rows_sel] for c in gcols}
+            if has_meta:
+                f["sample_metadata"] = pdf["meta"].to_numpy()[rows_sel]
+            f["query_id"] = qids[qsel]
+            f["num_kmers"] = nuniq[qsel]
+            f["num_kmers_found"] = fm[rsel, qsel].astype(np.int64)
+            f["percent_kmers_found"] = (100.0 * f["num_kmers_found"]
+                                        / f["num_kmers"])
+            yield pd.DataFrame(f)
+
+    res = bloom_rows.mapInPandas(match_rows, schema=schema)
     # Q8/Q9: ascending query id, descending hit count within a query
     return res.orderBy("query_id", F.desc("num_kmers_found"), *gcols)
 
@@ -242,79 +167,27 @@ def containment_counts(sketches: DataFrame,
     """Per-query MATCH COUNTS (Q10 result-merge analog): how many groups
     contain ≥ threshold of each query's k-grams.
 
-    Same scan kernel as containment_search, but each partition emits one
-    row per query (its local match count) and a groupBy sums them — the
-    result traffic is O(n_queries x n_partitions) rows regardless of how
-    many groups match, which is the right shape when queries are broad
-    (a per-group emit would ship millions of match rows nobody reads).
+    Same scan as containment_search, but each partition keeps one running
+    total per query and emits one row per query — the result traffic is
+    O(n_queries x n_partitions) rows regardless of how many groups match,
+    which is the right shape when queries are broad (a per-group emit
+    would ship millions of match rows nobody reads).
     Output: query_id, num_kmers, n_matches.
     """
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError("threshold must be in (0, 1]")
-    prepared = prepare_queries(queries, cfg)
-    sc = sketches.sparkSession.sparkContext
-    mask = np.uint32(cfg.bloom.m - 1)
-    masked = [(int(qid), (h.astype(np.uint32) & mask), int(h.shape[0]))
-              for qid, h in prepared]
-    flat_idx = (np.concatenate([m.ravel() for _, m, _ in masked])
-                if masked else np.empty(0, dtype=np.uint32))
-    qoff = np.concatenate(
-        ([0], np.cumsum([m.size for _, m, _ in masked]))).astype(np.int64)
-    bq = sc.broadcast((masked, flat_idx, qoff))
-    hdr_size = _HDR.size
-    n_bytes = cfg.bloom.n_bytes
-    num_hash = cfg.bloom.num_hash
-    cfg_log2_m = cfg.bloom.log2_m
+    bloom_rows, bq, scan = _scan_core(sketches, queries, cfg, threshold)
 
-    def scan_counts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import _native
-        qs, flat_q, qoff_q = bq.value
-        nq = len(qs)
-        if nq == 0:
-            return
-        qids_arr = np.asarray([q[0] for q in qs], dtype=np.int64)
-        nuniq_arr = np.asarray([q[2] for q in qs], dtype=np.int64)
-        thr_arr = (threshold * nuniq_arr).astype(np.int64)
-        valid = nuniq_arr > 0
-        totals = np.zeros(nq, dtype=np.int64)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            B = np.empty((n, n_bytes), dtype=np.uint8)
-            for i, s in enumerate(pdf["state"].to_numpy()):
-                magic, _ver, row_l2m, row_nh = struct.unpack_from("<IBBB", s, 0)
-                if (magic != _BLOOM_MAGIC or row_l2m != cfg_log2_m
-                        or row_nh != num_hash):
-                    raise ValueError("containment_counts: state/config "
-                                     "param mismatch; fold() first")
-                B[i] = np.frombuffer(s, dtype=np.uint8, count=n_bytes,
-                                     offset=hdr_size)
-            if _native.HAVE_NATIVE:
-                for _r0, fm in _count_matrix_chunks(B, flat_q, qoff_q,
-                                                    num_hash, nq):
-                    totals += ((fm >= thr_arr[None, :]) & valid[None, :]
-                               ).sum(axis=0)
-            else:
-                for j, (qid, idx, n_unique) in enumerate(qs):
-                    if n_unique == 0:
-                        continue
-                    flat = idx.ravel()
-                    byte_idx = (flat >> np.uint32(3)).astype(np.int64)
-                    bit_shift = (flat & np.uint32(7)).astype(np.uint8)
-                    chunk = max(1, (1 << 24) // max(flat.size, 1))
-                    for r0 in range(0, n, chunk):
-                        sub = B[r0:r0 + chunk]
-                        g = (sub[:, byte_idx] >> bit_shift) & np.uint8(1)
-                        found = g.reshape(sub.shape[0], n_unique,
-                                          num_hash).all(axis=2).sum(axis=1)
-                        totals[j] += int((found >= thr_arr[j]).sum())
-        yield pd.DataFrame({"query_id": qids_arr, "num_kmers": nuniq_arr,
+    def partition_totals(batches: Iterator[pd.DataFrame]
+                         ) -> Iterator[pd.DataFrame]:
+        qids, nuniq, thr = bq.value[:3]
+        valid = nuniq > 0
+        totals = np.zeros(qids.shape[0], dtype=np.int64)
+        for _pdf, _r0, fm in scan(batches):
+            totals += ((fm >= thr[None, :]) & valid[None, :]).sum(axis=0)
+        yield pd.DataFrame({"query_id": qids, "num_kmers": nuniq,
                             "n_matches": totals})
 
-    bloom_rows = sketches.filter(F.col("kind") == KIND_BLOOM)
     partials = bloom_rows.mapInPandas(
-        scan_counts, schema="query_id long, num_kmers long, n_matches long")
+        partition_totals, schema="query_id long, num_kmers long, n_matches long")
     return (partials.groupBy("query_id", "num_kmers")
             .agg(F.sum("n_matches").alias("n_matches"))
             .filter(F.col("num_kmers") > 0)  # F10: no row for empty queries

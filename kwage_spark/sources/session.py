@@ -35,14 +35,3 @@ def get_spark(app: str = "kwage_spark", master: str | None = None,
         .getOrCreate()
     )
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings")) -> dict:
-    """Read the driver-generated parquet tables and register temp views."""
-    out = {}
-    for n in names:
-        df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

@@ -200,6 +200,32 @@ def test_search_rejects_mismatched_filter_params(spark, sketches):
         res.collect()
 
 
+def test_mixed_bloom_params_fail_both_shapes_alike(spark, sketches, corpus):
+    """A store holding one bloom row built with another (log2_m, num_hash)
+    must fail containment_search and containment_counts with the same
+    ValueError, naming both parameter sets and fold()."""
+    import re
+    from kwage_spark.operators.search import containment_counts
+    odd = SketchConfig(group_cols=CFG.group_cols, content_col=CFG.content_col,
+                       kinds=("bloom",),
+                       bloom=BloomParams(k=CFG.bloom.k, log2_m=14,
+                                         num_hash=2))
+    mixed = sketches.filter("kind = 'bloom'").unionByName(
+        build_sketches(spark.createDataFrame(corpus.iloc[:1]), odd))
+    queries = [(0, corpus.iloc[0]["content"][:60])]
+    msgs = []
+    for op in (containment_search, containment_counts):
+        with pytest.raises(Exception) as err:
+            op(mixed, queries, CFG, threshold=0.5).collect()
+        m = re.search(r"ValueError: (containment scan: [^\n]*)", str(err.value))
+        assert m, str(err.value)[-2000:]
+        msgs.append(m.group(1))
+    assert msgs[0] == msgs[1]
+    assert "log2_m=14, num_hash=2" in msgs[0]
+    assert "log2_m=16, num_hash=3" in msgs[0]
+    assert "fold()" in msgs[0]
+
+
 def test_ingest_handles_null_and_empty_edges(spark):
     """0-kgram rows, null content, and null group keys must not kill tasks
     (Arrow data buffer can be None; null keys are keyed as '')."""

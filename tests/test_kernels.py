@@ -303,22 +303,6 @@ def test_native_kernel_parity_with_numpy():
         _native.HAVE_NATIVE = True
 
 
-def test_native_batch_multiseed_variable_lengths():
-    from kwage_spark.kernels import _native
-    from kwage_spark.kernels.murmur3 import murmur3_32
-    if not _native.HAVE_NATIVE:
-        import pytest
-        pytest.skip("no C compiler in this environment")
-    strings = [b"", b"a", b"abcd", b"hello world", RNG.bytes(100)]
-    buf = np.frombuffer(b"".join(strings), dtype=np.uint8)
-    offsets = np.cumsum([0] + [len(s) for s in strings]).astype(np.int64)
-    seeds = np.asarray([0, 3], dtype=np.uint32)
-    out = _native.batch_multiseed(buf, offsets, seeds)
-    for i, s in enumerate(strings):
-        for j, seed in enumerate((0, 3)):
-            assert out[i, j] == murmur3_32(s, seed), (i, seed)
-
-
 def test_native_sketch_updates_match_numpy():
     """bloom_scatter / hll_update / cms_update vs the numpy fallbacks."""
     from kwage_spark.kernels import _native
@@ -347,21 +331,6 @@ def test_native_sketch_updates_match_numpy():
     assert np.array_equal(a, b)
     a, b = both(lambda: CMSState(9, 4).add_hashes(H).table)
     assert np.array_equal(a, b)
-
-
-def test_batch_sliding_matches_per_row():
-    from kwage_spark.kernels.murmur3 import (
-        murmur3_32_sliding, murmur3_32_sliding_batch)
-    seeds = np.arange(3, dtype=np.uint32)
-    raws = [bytes(RNG.bytes(int(n))) for n in RNG.integers(0, 64, size=30)]
-    raws += [b"", b"short", RNG.bytes(500)]
-    got = murmur3_32_sliding_batch(raws, 8, seeds)
-    parts = [murmur3_32_sliding(np.frombuffer(r, dtype=np.uint8), 8, seeds)
-             for r in raws]
-    want = np.concatenate([pp for pp in parts if pp.shape[0]]) \
-        if any(pp.shape[0] for pp in parts) else np.empty((0, 3), np.uint32)
-    assert np.array_equal(got, want)
-    assert murmur3_32_sliding_batch([], 8, seeds).shape == (0, 3)
 
 
 def test_tdigest_quantiles_vs_exact():
@@ -492,14 +461,13 @@ def test_sliced_scan_parity_with_rowmajor():
 
 def test_jumbo_query_routes_to_int32_kernel():
     """A query with >= 2^16 unique grams must NOT take the bit-sliced path
-    (uint16 per-row counters would wrap mod 65536); _count_matrix_chunks
+    (uint16 per-row counters would wrap mod 65536); scan_count_chunks
     routes the batch to the int32 row-major kernel instead."""
     from kwage_spark.kernels import _native
     if not _native.HAVE_NATIVE:
         import pytest
         pytest.skip("no C compiler")
     import numpy as np
-    from kwage_spark.operators.search import _count_matrix_chunks
     num_hash = 1
     n_grams_jumbo = (1 << 16) + 500
     rng = np.random.default_rng(23)
@@ -513,9 +481,96 @@ def test_jumbo_query_routes_to_int32_kernel():
     flat = np.concatenate([a.ravel() for a in idx_list]).astype(np.uint32)
     qoff = np.concatenate(([0], np.cumsum([a.size for a in idx_list])
                            )).astype(np.int64)
-    chunks = list(_count_matrix_chunks(B, flat, qoff, num_hash, nq=64))
+    chunks = list(_native.scan_count_chunks(B, flat, qoff, num_hash))
     full = np.concatenate([m for _r0, m in chunks], axis=0)
     assert full.shape == (8, 64)
     # uint16 wrap would report n_grams_jumbo - 65536 = 500
     assert (full[:, 0] == n_grams_jumbo).all(), full[:, 0]
     assert (full[:, 1:] == 1).all()
+
+
+def _queries(rng, sizes, m_bits, num_hash):
+    """Flat gram-major bit indices + offsets for queries of given sizes."""
+    idx = [rng.integers(0, m_bits, size=(n, num_hash), dtype=np.uint32)
+           for n in sizes]
+    flat = (np.concatenate([a.ravel() for a in idx]) if idx
+            else np.empty(0, dtype=np.uint32)).astype(np.uint32)
+    qoff = np.concatenate(([0], np.cumsum([a.size for a in idx]))
+                          ).astype(np.int64)
+    return flat, qoff
+
+
+def test_numpy_fallbacks_match_native():
+    """Every _native wrapper an operator calls must give the native result
+    from its own numpy path when HAVE_NATIVE is False (no Spark here)."""
+    import pytest
+    from kwage_spark.kernels import _native
+    if not _native.HAVE_NATIVE:
+        pytest.skip("no C compiler")
+    rng = np.random.default_rng(31)
+
+    def both(fn):
+        want = fn()
+        try:
+            _native.HAVE_NATIVE = False
+            got = fn()
+        finally:
+            _native.HAVE_NATIVE = True
+        return want, got
+
+    def scan(B, flat, qoff, num_hash):
+        chunks = list(_native.scan_count_chunks(B, flat, qoff, num_hash))
+        assert [r0 for r0, _ in chunks][:1] == [0]
+        return np.concatenate([m for _, m in chunks], axis=0)
+
+    # scan chooser: row-major (< 64 queries) and bit-sliced (>= 64), each
+    # with an empty query; then a jumbo query (>= 2^16 grams)
+    num_hash = 3
+    B = rng.integers(0, 256, size=(101, 256), dtype=np.uint8)
+    for sizes in ([7, 0, 23, 1, 40],
+                  [int(n) for n in rng.integers(0, 30, size=70)] + [0]):
+        flat, qoff = _queries(rng, sizes, B.shape[1] * 8, num_hash)
+        want, got = both(lambda: scan(B, flat, qoff, num_hash))
+        assert want.shape == (B.shape[0], len(sizes))
+        assert np.array_equal(want, got)
+        assert not want[:, sizes.index(0)].any()
+    Bj = rng.integers(0, 256, size=(9, 32), dtype=np.uint8)
+    flat, qoff = _queries(rng, [(1 << 16) + 500] + [3] * 63, 256, 1)
+    want, got = both(lambda: scan(Bj, flat, qoff, 1))
+    assert np.array_equal(want, got)
+
+    # sliding_ranges_multiseed: unordered ranges, some shorter than k
+    k = 8
+    buf = np.frombuffer(rng.bytes(2000), dtype=np.uint8)
+    starts = np.asarray([500, 10, 1200, 3, 900, 1990], dtype=np.int64)
+    lens = np.asarray([40, 5, 100, 0, 8, 7], dtype=np.int64)
+    seeds = np.arange(4, dtype=np.uint32)
+    want, got = both(lambda: _native.sliding_ranges_multiseed(
+        buf, starts, lens, k, seeds))
+    assert want.shape == (33 + 93 + 1, 4)
+    assert np.array_equal(want, got)
+
+    # sliding_ranges_minhash: a small flush constant splits the batch
+    mh_seeds = (0x1000 + np.arange(16)).astype(np.uint32)
+    old = _native.MAX_STACKED_WINDOWS
+    try:
+        _native.MAX_STACKED_WINDOWS = 37
+        want, got = both(lambda: _native.sliding_ranges_minhash(
+            buf, starts, lens, k, mh_seeds))
+    finally:
+        _native.MAX_STACKED_WINDOWS = old
+    assert np.array_equal(want, got)
+    short = lens < k
+    assert (want[short] == 0xFFFFFFFF).all()
+    assert (want[~short] != 0xFFFFFFFF).any(axis=1).all()
+
+
+def test_operators_never_branch_on_native():
+    """The native-or-numpy choice lives inside kernels/_native.py; no
+    operator module may read HAVE_NATIVE."""
+    import pathlib
+    import kwage_spark
+    root = pathlib.Path(kwage_spark.__file__).parent / "operators"
+    offenders = [str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+                 if "HAVE_NATIVE" in p.read_text()]
+    assert offenders == []

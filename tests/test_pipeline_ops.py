@@ -485,9 +485,10 @@ def test_unigram_topn_tie_break_is_deterministic(spark):
 
 
 def test_minhash_batched_signatures_byte_identical(spark, docs):
-    """The batched stack+reduceat path must produce EXACTLY the per-doc
-    signatures (same kernel, same widths — no padding ambiguity), also
-    when the MAX_STACKED_WINDOWS flush splits a batch mid-stream."""
+    """The batched signature path must produce EXACTLY the per-doc
+    signatures (same kernel, same widths — no padding ambiguity). Its
+    numpy path, flush splits included, is pinned against the native one
+    in test_kernels.py::test_numpy_fallbacks_match_native."""
     import kwage_spark.operators.dedup as dd
     from kwage_spark.kernels.murmur3 import murmur3_32_multiseed
     from kwage_spark.kernels.shingle import windows_of
@@ -507,14 +508,6 @@ def test_minhash_batched_signatures_byte_identical(spark, docs):
            dd.minhash_signatures(sub, "doc_id", "text", k=5,
                                  num_perm=32).collect()}
     assert got == want
-
-    # numpy batched fallback, with a tiny flush threshold so every
-    # Arrow batch splits mid-stream (closure-captured: reaches workers)
-    got_np = {r["doc_id"]: r["sig"] for r in
-              dd.minhash_signatures(sub, "doc_id", "text", k=5,
-                                    num_perm=32, use_native=False,
-                                    max_stacked=37).collect()}
-    assert got_np == want
 
 
 def _uf_oracle(edge_list):
